@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional query-name filter for local runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus("4")
     // SHARED session config (Sessions.scala): the verified plans are
     // the measured plans — no bench-only flags (VERDICT r14 item 2)
     val spark = Sessions.local(cpus).getOrCreate()

@@ -587,28 +587,33 @@ object Cli {
 
     val warehouse = sys.env.getOrElse("GRAFT_WAREHOUSE",
       dir.resolve(".graft-warehouse").toString)
-    // reuse a session when the process already has one (a spec, a
-    // notebook); only stop a session this command itself created
-    val existing = org.apache.spark.sql.SparkSession.getDefaultSession
-    val spark = existing.getOrElse {
-      // shared session config (graft.Sessions): the CLI plans queries
-      // under the same semantics Bench measures and Verify checks
-      val s = graft.Sessions.configure(
-        org.apache.spark.sql.SparkSession.builder()
-          .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-          .appName(s"graft-trigger-$id"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    try {
+    withTriggerSession(s"graft-trigger-$id") { spark =>
       val runner = new GraphRunner(spark, manifest, warehouse,
         componentResolver =
           Packaging.componentResolverFromZips(registryRoot.toString))
       runner.runNode(id)
       println(s"Triggered node ${nodePath.getOrElse(id)}")
-    } finally if (existing.isEmpty) spark.stop()
+    }
+  }
+
+  /** Runs `body` on the process's session when it already has one (a
+    * spec, a notebook), else on a new one with the shared config
+    * (graft.Sessions) at `GRAFT_MASTER`, default `local[*]`, so the CLI
+    * plans queries under the same semantics Bench measures and Verify
+    * checks. Only a session this call created is stopped.
+    */
+  private def withTriggerSession(appName: String)(
+      body: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    val existing = org.apache.spark.sql.SparkSession.getDefaultSession
+    val spark = existing.getOrElse {
+      val s = graft.Sessions.local(graft.Sessions.cpus("32"))
+        .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
+        .appName(appName)
+        .getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      s
+    }
+    try body(spark) finally if (existing.isEmpty) spark.stop()
   }
 
   /** The `--due` poll: run every cron-due node (catch-up rule,
@@ -631,18 +636,7 @@ object Cli {
     val lastRuns = graft.graph.GraphScheduler.loadLastRuns(ledger)
     val due = graft.graph.GraphScheduler.due(manifest, lastRuns, now)
     if (due.isEmpty) { println("No nodes due."); return }
-    val existing = org.apache.spark.sql.SparkSession.getDefaultSession
-    val spark = existing.getOrElse {
-      val s = graft.Sessions.configure(
-        org.apache.spark.sql.SparkSession.builder()
-          .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-          .appName("graft-trigger-due"),
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    try {
+    withTriggerSession("graft-trigger-due") { spark =>
       val runner = new GraphRunner(spark, manifest, warehouse,
         componentResolver =
           Packaging.componentResolverFromZips(registryRoot.toString))
@@ -653,7 +647,7 @@ object Cli {
       graft.graph.GraphScheduler.saveLastRuns(ledger,
         lastRuns ++ due.map(_ -> now))
       println(s"Triggered ${due.size} due node(s): ${due.mkString(", ")}")
-    } finally if (existing.isEmpty) spark.stop()
+    }
   }
 
   // ---------------------------------------------------- delete/update/config

@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, noop, seconds}
+import graft.Sessions
 import graft.llm.Similarity
 
 /** ANN index-family scale probe (SCALING.md evidence for l72/l93/l94/
@@ -32,15 +33,7 @@ object AnnProbe {
     val embDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = if (args.length > 1) args(1).toInt else 3
     val nCells = if (args.length > 2) args(2).toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = graft.Fixtures.table(spark, embDir, "embeddings")
@@ -58,13 +51,6 @@ object AnnProbe {
       .localCheckpoint()
     val batchRows = batch.count()
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
     val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
     def fresh(): String = {
       val p = Files.createTempDirectory("annprobe"); roots += p; p.toString
@@ -80,7 +66,7 @@ object AnnProbe {
       // build is the one expensive stage (Lloyd over the corpus) —
       // timed once; the per-query stages below get the full median-of-N
       val idxDir = fresh()
-      val buildS = timed {
+      val buildS = seconds {
         val (quantizer, postings) =
           Similarity.buildIvfIndex(corpus, "c_id", "c_vec", nCells)
         quantizer.write.mode("overwrite").parquet(s"$idxDir/quantizer.parquet")
@@ -92,14 +78,14 @@ object AnnProbe {
 
       val appendS = median((1 to runs).map { i =>
         val out = fresh()
-        timed {
+        seconds {
           Similarity.appendToIvfIndex(batch, quantizer, "c_id", "c_vec")
             .write.mode("overwrite").parquet(s"$out/delta.parquet")
         }
       })
 
       val probeS = median((1 to runs).map { _ =>
-        timed {
+        seconds {
           noop(Similarity.ivfPqTopKAgainstIndex(
             queries, quantizer, postings, corpus,
             "q_id", "c_id", "q_vec", "c_vec", k = 5))
@@ -107,7 +93,7 @@ object AnnProbe {
       })
 
       val pqS = median((1 to runs).map { _ =>
-        timed {
+        seconds {
           noop(Similarity.pqTopK(queries, corpus,
             "q_id", "c_id", "q_vec", "c_vec", k = 5))
         }

@@ -1,7 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Measure.timed
+import graft.Sessions
 
 /** Round-13 dedup scale probe: the LSH BANDING S-CURVE, measured.
   *
@@ -64,20 +67,10 @@ object DedupProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1x1000")
     val sliceMod = args.drop(1).headOption.map(_.toInt).getOrElse(25)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.Fixtures.table(spark, dir, "documents")
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // Phase A: s-curve exhibit on the slice — thin the REPLICA axis
     // (keep every sliceMod-th replica of every base doc), not doc_id

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.{Measure, Sessions}
 
 /** Round-14 multi-distinct formulation shoot-out (VERDICT r13 item 3).
   *
@@ -45,14 +47,7 @@ object DistinctProbe {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val runs = if (args.length > 1) args(1).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val li = graft.Fixtures.table(spark, dir, "lineitem")
@@ -66,13 +61,10 @@ object DistinctProbe {
     require(a == b, s"formulations disagree:\n  expand=$a\n  preagg=$b")
     println(s"[distinct-probe] results identical across formulations: $a")
 
-    def timed(f: => Long): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     for (r <- 1 to runs) {
-      val tE = timed(expandPlan(li).collect().length.toLong)
+      val tE = Measure.seconds(expandPlan(li).collect())
       println(f"[distinct-probe] run$r expand_multi_distinct: ${tE}%.1f s")
-      val tP = timed(preAggPlan(li).collect().length.toLong)
+      val tP = Measure.seconds(preAggPlan(li).collect())
       println(f"[distinct-probe] run$r preagg_join:           ${tP}%.1f s")
     }
     spark.stop()

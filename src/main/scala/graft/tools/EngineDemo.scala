@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.graph.{CodeNode, GraphManifest, GraphRunner, NodeContext}
 
@@ -11,11 +10,7 @@ import graft.graph.{CodeNode, GraphManifest, GraphRunner, NodeContext}
   */
 object EngineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val dir = Files.createTempDirectory("demo-graph").toString

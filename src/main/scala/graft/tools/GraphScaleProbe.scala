@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Measure.timed
+import graft.Sessions
 
 /** Round-14 iterative-graph scale probe (VERDICT r13 item 4): the
   * PageRank/TrustRank/HITS/connected-components/recursive-closure
@@ -31,19 +33,8 @@ import org.apache.spark.sql.functions._
 object GraphScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(34000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     // l98-family link graph: ring + quadratic + hubs (i² stays < 2⁶³
     // for n < 3e9; the probe default is 3.4e7)

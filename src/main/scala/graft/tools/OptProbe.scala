@@ -1,399 +1,42 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import graft.{Measure, Sessions, SparkEntry}
 
-/** Scratch sub-component timer for the r14 optimization round: times
-  * named plan fragments with the bench methodology (noop sink, warmup
-  * + median of 3) so a hot query's cost can be attributed operator by
-  * operator before rewriting it (guide §1). Not part of any driver
-  * surface.
+/** Same-JVM query timer: times registry queries with the bench
+  * methodology ([[graft.Measure.noopRuns]]: noop sink, GC, warm-up +
+  * median of 3) so a hot query's cost can be compared before and after
+  * a rewrite without a full bench run. The r14 plan-fragment A/Bs that
+  * used to live here are recorded in OPTIMIZATION_r14.md.
   *
-  * Run: sbt "runMain graft.tools.OptProbe [fragment ...]"
+  * Run: sbt "runMain graft.tools.OptProbe q:<query> [q:<query> ...]"
   */
 object OptProbe {
-  def time(name: String, df: => DataFrame): Unit = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    System.gc() // the bench's suite-order decontamination, same reason
-    once()
-    val runs = Seq.fill(3)(once()).sorted
-    println(f"[optprobe] $name%-40s median=${runs(1)}%.3f s (min=${runs.head}%.3f max=${runs.last}%.3f)")
+  val usage = "usage: OptProbe q:<registered query name> [q:<name> ...]"
+
+  /** The query names named by `args`, or the usage line (with the
+    * offending arguments) when there are none or any argument is not
+    * `q:<registered query name>`.
+    */
+  private[graft] def parseArgs(args: Seq[String],
+      registered: String => Boolean): Either[String, Seq[String]] = {
+    val bad = args.filterNot(a => a.startsWith("q:") && registered(a.drop(2)))
+    if (args.isEmpty) Left(usage)
+    else if (bad.nonEmpty) Left(s"$usage\nunknown: ${bad.mkString(" ")}")
+    else Right(args.map(_.drop(2)))
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.local(cpus).getOrCreate()
+    val names = parseArgs(args.toSeq, SparkEntry.queries.contains) match {
+      case Right(ns) => ns
+      case Left(msg) => System.err.println(msg); sys.exit(2)
+    }
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = if (args.nonEmpty) Some(args.toSet) else None
-    def want(n: String) = only.forall(_(n))
-
-    // "q:<name>" fragments time a registry query as-is (the r14
-    // smj_on/smj_off toggles are gone with the session flag itself —
-    // the shared Sessions builder is the only session authority)
-    args.foreach { a =>
-      if (a.startsWith("q:")) {
-        val n = a.drop(2)
-        time(s"q:$n", graft.SparkEntry.queries(n)(spark, sf))
-      }
-    }
-
-    val li = graft.Fixtures.table(spark, sf, "lineitem")
-
-    if (want("papprox_price")) time("papprox_price(10000)",
-      li.groupBy("l_returnflag")
-        .agg(expr("percentile_approx(l_extendedprice, array(0.25,0.75), 10000)")))
-    if (want("papprox_price_2k")) time("papprox_price(2000)",
-      li.groupBy("l_returnflag")
-        .agg(expr("percentile_approx(l_extendedprice, array(0.25,0.75), 2000)")))
-    if (want("pexact_qty")) time("pexact_qty+papprox_qty",
-      li.groupBy("l_returnflag")
-        .agg(expr("percentile(l_quantity, array(0.495,0.5,0.505))"),
-          expr("percentile_approx(l_quantity, 0.5, 10000)")))
-    if (want("sortpct_price")) time("sortpct_price(4ps)",
-      graft.operators.Percentiles.exactByGroup(li, "l_returnflag",
-        "l_extendedprice", Seq(0.245, 0.255, 0.745, 0.755)))
-    if (want("kll_sketch")) time("kll_sketch_per_flag",
-      li.groupBy("l_returnflag")
-        .agg(graft.functions.QuantileSketch.sketch(col("l_extendedprice"))))
-    if (want("sortpct_tagged")) {
-      val cents = li.select(col("l_returnflag").as("grp"),
-        round(col("l_extendedprice") * 100).cast("bigint").as("_cents"))
-      time("sortpct_tagged(2x rows, 5ps)",
-        graft.operators.Percentiles.exactByGroup(
-          cents.unionAll(cents.select(lit("ALL").as("grp"), col("_cents"))),
-          "grp", "_cents", Seq(0.45, 0.5, 0.55, 0.90, 0.94)))
-    }
-    if (want("scan_only")) time("scan_only(3cols)",
-      li.select("l_returnflag", "l_quantity", "l_extendedprice"))
-
-    if (want("l95_assign")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      time("l95_assign_only",
-        graft.llm.Corpus.assignShards(docs, "doc_id",
-          graft.llm.TextAnalysis.tokenCount(col("text")), 4096L))
-    }
-    if (want("l141_old") || want("l126_old")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      if (want("l126_old")) {
-        val grams = graft.llm.TextDedup.withShingles(
-            docs.select(col("doc_id").as("id"), col("text")), "text", "g", 8)
-          .select(col("id"), explode(col("g")).as("gram"))
-        val census = grams.groupBy("gram").agg(countDistinct("id").as("_df"))
-        time("l126_old(join-back)", grams.join(census, "gram")
-          .groupBy("id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("_df") === 1, 1L).otherwise(0L)).as("n_novel")))
-      }
-      if (want("l141_old")) {
-        val grams = graft.llm.TextDedup.withShingles(
-            docs.select(col("source").as("src"), col("text")), "text", "g", 8)
-          .select(col("src"), explode(col("g")).as("gram")).distinct()
-        val a = grams.select(col("gram"), col("src").as("source_a"))
-        val b = grams.select(col("gram"), col("src").as("source_b"))
-        time("l141_old(self-join)",
-          a.join(b, "gram").filter(col("source_a") < col("source_b"))
-            .groupBy("source_a", "source_b")
-            .agg(count(lit(1)).as("n_shared_grams")))
-      }
-    }
-    if (want("hits_dense")) {
-      import org.apache.spark.storage.StorageLevel
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      val n0 = docs.count()
-      val edges0 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") + 1) % n0).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * col("doc_id") + 1) % n0).as("dst")))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") % 25) * 20).as("dst")))
-      def denseHits(): DataFrame = {
-        val e = edges0.select(col("src"), col("dst"))
-          .repartition(col("src")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val nodes = e.select(col("src").as("id"))
-          .union(e.select(col("dst").as("id"))).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val cached = scala.collection.mutable.ArrayBuffer[DataFrame](e, nodes)
-        try {
-          nodes.count()
-          def normalized(scores: DataFrame, valCol: String): DataFrame = {
-            val s = scores.persist(StorageLevel.MEMORY_AND_DISK)
-            cached += s
-            val total = s.agg(
-              sum(col(valCol).cast("decimal(28,18)")).cast("double").as("_tot"))
-            val nn = s.crossJoin(broadcast(total))
-              .select(col("id"), round(col(valCol) / col("_tot"), 12).as(valCol))
-            spark.createDataFrame(nn.rdd, nn.schema)
-          }
-          var hubs = nodes.withColumn("h", lit(1.0))
-          var auths: DataFrame = null
-          for (_ <- 1 to 2) {
-            auths = normalized(
-              nodes.join(
-                e.join(hubs.withColumnRenamed("id", "src"), "src")
-                  .groupBy(col("dst").as("id")).agg(sum(col("h").cast("decimal(28,18)")).cast("double").as("a")),
-                Seq("id"), "left")
-                .select(col("id"), coalesce(col("a"), lit(0.0)).as("a")), "a")
-            hubs = normalized(
-              nodes.join(
-                e.join(auths.withColumnRenamed("id", "dst"), "dst")
-                  .groupBy(col("src").as("id")).agg(sum(col("a").cast("decimal(28,18)")).cast("double").as("h")),
-                Seq("id"), "left")
-                .select(col("id"), coalesce(col("h"), lit(0.0)).as("h")), "h")
-          }
-          nodes.join(hubs, "id").join(auths, "id")
-            .select(col("id"), col("h").as("hub"), col("a").as("authority"))
-            .localCheckpoint()
-        } finally cached.foreach(_.unpersist())
-      }
-      time("hits_dense(old)", denseHits()
-        .select(col("id"), round(col("hub"), 6).as("hub"),
-          round(col("authority"), 6).as("authority")))
-    }
-    if (want("hits_lazy")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      val n0 = docs.count()
-      val edges0 = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") + 1) % n0).as("dst"))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * col("doc_id") + 1) % n0).as("dst")))
-        .unionAll(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") % 25) * 20).as("dst")))
-      val e = edges0.repartition(col("src")).distinct()
-      val nodes = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-      def normalized(scores: DataFrame, valCol: String): DataFrame = {
-        val total = scores.agg(
-          sum(col(valCol).cast("decimal(28,18)")).cast("double").as("_tot"))
-        scores.crossJoin(broadcast(total))
-          .select(col("id"), round(col(valCol) / col("_tot"), 12).as(valCol))
-      }
-      var hubs = nodes.withColumn("h", lit(1.0))
-      var auths: DataFrame = null
-      for (_ <- 1 to 2) {
-        auths = normalized(
-          e.join(hubs.withColumnRenamed("id", "src"), "src")
-            .groupBy(col("dst").as("id"))
-            .agg(sum(col("h").cast("decimal(28,18)")).cast("double").as("a")), "a")
-        hubs = normalized(
-          e.join(auths.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(col("src").as("id"))
-            .agg(sum(col("a").cast("decimal(28,18)")).cast("double").as("h")), "h")
-      }
-      val out = nodes.join(hubs, Seq("id"), "left").join(auths, Seq("id"), "left")
-        .select(col("id"),
-          round(coalesce(col("h"), lit(0.0)), 6).as("hub"),
-          round(coalesce(col("a"), lit(0.0)), 6).as("authority"))
-      time("hits_lazy(one plan)", out)
-      println("[optprobe] hits_lazy reused exchanges: " +
-        "ReusedExchange".r.findAllIn(out.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))).length)
-    }
-    if (want("hits_scale")) {
-      // operator-level HITS at 3.4M nodes / ~10M edges (the
-      // GraphScaleProbe graph at 1/10 its default): guards the lazy
-      // rewrite against recomputation blowup before trusting it
-      val n0 = 3400000L
-      val ids = spark.range(n0).toDF("i")
-      val edges0 = ids.select(col("i").as("src"), ((col("i") + 1) % n0).as("dst"))
-        .unionAll(ids.select(col("i").as("src"),
-          ((col("i") * col("i") + 1) % n0).as("dst")))
-        .unionAll(ids.select(col("i").as("src"), ((col("i") % 25) * 20).as("dst")))
-      val t0 = System.nanoTime()
-      val r = graft.operators.PageRank.hits(edges0, "src", "dst", iterations = 2)
-      r.write.format("noop").mode("overwrite").save()
-      println(f"[optprobe] hits_scale(3.4M nodes) once=${(System.nanoTime()-t0)/1e9}%.1f s")
-    }
-    if (want("l68_hash")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      val k = 3
-      val ws = split(trim(col("text")), "\\s+")
-      val base = docs.filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("id"), ws.as("ws"))
-      val grams = base.filter(size(col("ws")) >= k)
-        .select(col("id"),
-          posexplode(transform(sequence(lit(0), size(col("ws")) - k),
-            j => xxhash64(slice(col("ws"), j + 1, lit(k)))))
-            .as(Seq("p", "gh")))
-      val dups = grams.groupBy("gh").agg(count(lit(1)).as("n_occ"))
-        .filter(col("n_occ") > 1).select("gh")
-      val covered = grams.join(dups, "gh")
-        .select(col("id"),
-          explode(sequence(col("p"), col("p") + k - 1)).as("pos"))
-        .distinct()
-      val toks = base.select(col("id"), posexplode(col("ws")).as(Seq("pos", "w")))
-      val rebuilt = toks.join(covered, Seq("id", "pos"), "left_anti")
-        .groupBy("id")
-        .agg(count(lit(1)).as("n_kept"),
-          array_join(
-            transform(array_sort(collect_list(struct(col("pos"), col("w")))),
-              s => s.getField("w")), " ").as("clean_text"))
-      time("l68_hashed_grams",
-        base.select(col("id"), size(col("ws")).cast("long").as("n_tokens"))
-          .join(rebuilt, Seq("id"), "left")
-          .select(col("id"), col("n_tokens"),
-            coalesce(col("n_kept"), lit(0L)).cast("long").as("n_kept"),
-            coalesce(col("clean_text"), lit("")).as("clean_text")))
-    }
-    if (want("l95_shm")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      val out = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("/dev/shm"), "graft-shards-").toString
-      time("l95_write_to_shm",
-        graft.llm.Corpus.writeShards(docs, "doc_id",
-          graft.llm.TextAnalysis.tokenCount(col("text")),
-          tokensPerShard = 4096L, dir = s"$out/shards"))
-    }
-    if (want("l95_shardcount")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      val a = graft.llm.Corpus.assignShards(docs, "doc_id",
-        graft.llm.TextAnalysis.tokenCount(col("text")), 4096L)
-      println("[optprobe] n_shards=" +
-        a.select(countDistinct(col("shard"))).head().getLong(0))
-    }
-
-    // variant A: n per group via tiny agg + broadcast join, ONE
-    // row_number window instead of row_number + count windows
-    def sortPctA(df: DataFrame, grp: String, v: String,
-        ps: Seq[Double]): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(grp).orderBy(col("_v"))
-      val ns = df.groupBy(grp).agg(count(lit(1)).as("_n"))
-      val ranked = df.select(col(grp), col(v).cast("double").as("_v"))
-        .join(broadcast(ns), grp)
-        .withColumn("_i", row_number().over(w).cast("double") - 1.0)
-      val aggs = ps.zipWithIndex.flatMap { case (p, k) =>
-        val r = lit(p) * (col("_n") - 1).cast("double")
-        Seq(max(when(col("_i") === floor(r), col("_v"))).as(s"_lo$k"),
-          max(when(col("_i") === ceil(r), col("_v"))).as(s"_hi$k"))
-      } :+ max(col("_n")).as("_n")
-      val g = ranked.groupBy(col(grp)).agg(aggs.head, aggs.tail: _*)
-      g.select(col(grp), array(ps.zipWithIndex.map { case (p, k) =>
-        val r = lit(p) * (col("_n") - 1).cast("double")
-        col(s"_lo$k") + (col(s"_hi$k") - col(s"_lo$k")) * (r - floor(r))
-      }: _*).as("ps"))
-    }
-    // variant B: pre-aggregate counts per (grp, value) — the window
-    // then ranks DISTINCT values with a cumulative count, and each
-    // percentile picks the value whose cum-range covers its target rank
-    def sortPctB(df: DataFrame, grp: String, v: String,
-        ps: Seq[Double]): DataFrame = {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(grp).orderBy(col("_v"))
-      val cnts = df.select(col(grp), col(v).cast("double").as("_v"))
-        .groupBy(col(grp), col("_v")).agg(count(lit(1)).as("_c"))
-      val ns = cnts.groupBy(grp).agg(sum(col("_c")).as("_n"))
-      val ranked = cnts.join(broadcast(ns), grp)
-        .withColumn("_cum", sum(col("_c")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val aggs = ps.zipWithIndex.flatMap { case (p, k) =>
-        val r = lit(p) * (col("_n") - 1).cast("double")
-        Seq(
-          max(when(floor(r) >= col("_cum") - col("_c") &&
-            floor(r) < col("_cum"), col("_v"))).as(s"_lo$k"),
-          max(when(ceil(r) >= col("_cum") - col("_c") &&
-            ceil(r) < col("_cum"), col("_v"))).as(s"_hi$k"))
-      } :+ max(col("_n")).as("_n")
-      val g = ranked.groupBy(col(grp)).agg(aggs.head, aggs.tail: _*)
-      g.select(col(grp), array(ps.zipWithIndex.map { case (p, k) =>
-        val r = lit(p) * (col("_n") - 1).cast("double")
-        col(s"_lo$k") + (col(s"_hi$k") - col(s"_lo$k")) * (r - floor(r))
-      }: _*).as("ps"))
-    }
-    if (want("l107_fit") || want("l107_full")) {
-      val emb = graft.Fixtures.table(spark, sf, "embeddings")
-      val rotated = emb.select(col("vec_id"), col("label"),
-        graft.queries.Llm.blockRotate(col("embedding")).as("embedding"))
-      if (want("l107_fit")) {
-        def fitOnly(): Unit = {
-          val paired = emb.select(col("vec_id"), col("label"),
-              col("embedding").cast("array<float>").as("x"))
-            .join(rotated.select(col("vec_id"),
-              col("embedding").cast("array<float>").as("y")), "vec_id")
-            .filter(col("x").isNotNull && col("y").isNotNull &&
-              size(col("x")) === size(col("y")) && size(col("x")) > 0)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val t0 = System.nanoTime()
-            val fitRow = paired.groupBy(size(col("x")).as("_d"))
-              .agg(count(lit(1)).as("count"),
-                graft.llm.Align.OuterProductSum(col("x"), col("y")).as("m"))
-              .orderBy(col("count").desc, col("_d").desc)
-              .head(1).headOption
-            println(f"[optprobe] l107_fit head-action=${(System.nanoTime()-t0)/1e9}%.3f s d=${fitRow.map(_.getInt(0))}")
-          } finally paired.unpersist()
-        }
-        System.gc(); fitOnly(); fitOnly(); fitOnly()
-      }
-      if (want("l107_full")) time("l107_full",
-        graft.llm.Align.procrustesReport(emb, rotated,
-          "vec_id", "embedding", "label"))
-    }
-
-    val cents2 = li.select(col("l_returnflag").as("grp"),
-      round(col("l_extendedprice") * 100).cast("bigint").as("_cents"))
-    val tagged2 = cents2.unionAll(
-      cents2.select(lit("ALL").as("grp"), col("_cents")))
-    if (want("distinct_cents")) time("distinct(grp,cents)",
-      cents2.groupBy("grp", "_cents").count())
-    if (want("sortpctA_price")) time("sortpctA_price(4ps)",
-      sortPctA(li, "l_returnflag", "l_extendedprice",
-        Seq(0.245, 0.255, 0.745, 0.755)))
-    if (want("sortpctA_tagged")) time("sortpctA_tagged(5ps)",
-      sortPctA(tagged2, "grp", "_cents", Seq(0.45, 0.5, 0.55, 0.90, 0.94)))
-    if (want("sortpctB_price")) time("sortpctB_price(4ps)",
-      sortPctB(li, "l_returnflag", "l_extendedprice",
-        Seq(0.245, 0.255, 0.745, 0.755)))
-    if (want("sortpctB_tagged")) time("sortpctB_tagged(5ps)",
-      sortPctB(tagged2, "grp", "_cents", Seq(0.45, 0.5, 0.55, 0.90, 0.94)))
-
-    // --- input-skew probes (guide §2.5): single-file fixtures give a
-    // 1-task scan, so CPU-heavy per-row work (regex, tokenize, JSON
-    // parse) runs on one core. A/B: operator as-is vs a hash
-    // repartition of the input to defaultParallelism (the l12 device).
-    def spread(df: DataFrame, key: String): DataFrame =
-      df.repartition(spark.sparkContext.defaultParallelism, col(key))
-    if (want("spread_script")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      time("scriptMix(asis)",
-        graft.llm.TextAnalysis.scriptMix(docs, "doc_id", "text"))
-      time("scriptMix(spread)",
-        graft.llm.TextAnalysis.scriptMix(spread(docs, "doc_id"), "doc_id", "text"))
-    }
-    if (want("spread_tfidf")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      time("tfidf(asis)",
-        graft.llm.TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3))
-      time("tfidf(spread)",
-        graft.llm.TextAnalysis.tfidfTopTerms(spread(docs, "doc_id"), "doc_id", "text", 3))
-    }
-    if (want("spread_json")) {
-      val ev = graft.Fixtures.table(spark, sf, "events")
-      def planted(e: DataFrame) = e.select(
-        when(col("event_id") % 97 === 0, lit("oops{"))
-          .when(col("event_id") % 3 === 0,
-            concat(lit("{\"a\": "), col("user_id"),
-              lit(", \"b\": \""), col("event_type"), lit("\"}")))
-          .when(col("event_id") % 3 === 1,
-            concat(lit("{\"a\": \""), col("event_type"),
-              lit("\", \"c\": true, \"e\": "), col("user_id"), lit(".5}")))
-          .otherwise(concat(lit("{\"b\": \""), col("event_type"),
-            lit("\", \"d\": null}"))).as("j"))
-      time("jsonProfile(asis)", graft.llm.Corpus.jsonProfile(planted(ev), "j"))
-      time("jsonProfile(spread)",
-        graft.llm.Corpus.jsonProfile(planted(spread(ev, "event_id")), "j"))
-    }
-    if (want("spread_spans")) {
-      val docs = graft.Fixtures.table(spark, sf, "documents")
-      time("dupSpans(asis)",
-        graft.llm.Corpus.duplicateSpans(docs, "doc_id", "text", 3))
-      time("dupSpans(spread)",
-        graft.llm.Corpus.duplicateSpans(spread(docs, "doc_id"), "doc_id", "text", 3))
+    names.foreach { n =>
+      val runs = Measure.noopRuns(SparkEntry.queries(n)(spark, sf))
+      println(f"[optprobe] q:$n%-40s median=${Measure.median(runs)}%.3f s " +
+        f"(min=${runs.head}%.3f max=${runs.last}%.3f)")
     }
     spark.stop()
   }

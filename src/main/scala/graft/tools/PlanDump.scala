@@ -14,10 +14,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query...>")
     val outDir = args(0); val suffix = args(1); val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SHARED session config (Sessions.scala) — dumped plans are the
     // plans Bench times and Verify checks, by construction
-    val spark = graft.Sessions.local(cpus).getOrCreate()
+    val spark = graft.Sessions.local(graft.Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

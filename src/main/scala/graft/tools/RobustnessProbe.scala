@@ -115,19 +115,11 @@ object RobustnessProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("both") // empty | nulls | ragged | both
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def report(label: String, dir: String): Int = {
-      val t0 = System.nanoTime()
-      val fails = sweep(spark, dir)
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (fails, dt) = graft.Measure.timed(sweep(spark, dir))
       println(f"\n== $label: ${graft.SparkEntry.registry.size} queries, ${fails.size} failures ($dt%.1f s) ==")
       fails.foreach { case (n, err) => println(s"  FAIL $n — $err") }
       fails.size

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.{Measure, Sessions}
 
 /** Skew probe: does a hot join key pin the engine to one straggler
   * task, and do the two documented mitigations — AQE's runtime
@@ -17,7 +19,8 @@ import org.apache.spark.sql.functions._
   * shuffle: at real scale BOTH sides are too big to broadcast, which
   * is exactly when skew bites.
   *
-  * Measured (median of 3, noop sink):
+  * Measured ([[graft.Measure.noopRuns]]: warm-up + median of 3, noop
+  * sink):
   *   uniform      — baseline shuffle join, no hot key
   *   skew_noaqe   — hot key, AQE skew split disabled → straggler task
   *   skew_aqe     — hot key, AQE skew split on (thresholds lowered to
@@ -33,15 +36,8 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
 
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir = "/tmp/graft_skew"
@@ -90,17 +86,11 @@ object SkewProbe {
     conf("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     def timeIt(label: String)(mk: => DataFrame): (Double, Long) = {
-      var n = -1L
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val df = mk
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        n = mk.count()
-        dt
-      }.sorted
-      println(f"[skew] $label%-12s median ${runs(1)}%6.2f s  (min ${runs.head}%5.2f max ${runs.last}%5.2f)  rows=$n")
-      (runs(1), n)
+      val runs = Measure.noopRuns(mk)
+      val n = mk.count()
+      val med = Measure.median(runs)
+      println(f"[skew] $label%-12s median $med%6.2f s  (min ${runs.head}%5.2f max ${runs.last}%5.2f)  rows=$n")
+      (med, n)
     }
 
     def plainJoin(l: DataFrame): DataFrame =

@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, seconds}
+import graft.Sessions
 import graft.core.{Catalog, TableHandle}
 import graft.streaming.StreamingBridge
 
@@ -45,13 +46,7 @@ object StreamProbe {
     val phases: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet
       else Set("dedup", "curated", "neardup", "session")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Sessions.local(Sessions.cpus("32"))
       // the decade lesson (r14): the default HDFSBackedStateStore holds
       // every open session IN HEAP — the 100 M-event sessionize drain
       // OOMed a single availableNow micro-batch at 8 g. RocksDB is the
@@ -59,7 +54,6 @@ object StreamProbe {
       // configuration any 100 TB streaming deployment runs with.
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -73,11 +67,6 @@ object StreamProbe {
     val corpusRows = corpusDocs.count()
     val batchRows = batchDocs.count()
     val eventRows = events.count()
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
     val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
     def freshRoot(): String = {
@@ -106,7 +95,7 @@ object StreamProbe {
         // 4 files → 4 micro-batches at maxFilesPerTrigger=1: the drain
         // exercises the steady-state per-batch path, not one giant batch
         staging.append(batchDocs.repartition(4)); staging.flush()
-        val prep = timed {
+        val prep = seconds {
           if (mode == "neardup") {
             // the one-time index build the first drain's self-heal
             // would otherwise fold into batch 1 — pay it off the clock,
@@ -117,7 +106,7 @@ object StreamProbe {
             index.flush()
           }
         }
-        val drain = timed {
+        val drain = seconds {
           mode match {
             case "dedup" => StreamingBridge.dedupedIngest(
               spark, cat, "staging", corpus, "text", root, Some(1))
@@ -137,7 +126,7 @@ object StreamProbe {
       val cat = new Catalog(root)
       val src = new TableHandle(spark, cat, "events_src")
       src.append(events); src.flush()
-      timed {
+      seconds {
         StreamingBridge.drainTo(spark, cat,
           StreamingBridge.sessionizeNative(
             StreamingBridge.readStream(spark, cat, "events_src"),

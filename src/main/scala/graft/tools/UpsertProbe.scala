@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Measure.{median, seconds}
+import graft.Sessions
 import graft.core.{Catalog, TableHandle}
 
 /** Upsert/catalog scale probe (SCALING.md evidence for §2.1 S5): the
@@ -43,15 +44,7 @@ object UpsertProbe {
   def main(args: Array[String]): Unit = {
     val corpusDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus("32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val corpus = graft.Fixtures.table(spark, corpusDir, "orders")
@@ -74,11 +67,6 @@ object UpsertProbe {
     val (b8, b64, b256) = (batch(8), batch(64), batch(Buckets))
     val batchRows = b8.count()
 
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-
     val roots = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
     def freshRoot(): String = {
       val p = Files.createTempDirectory("upsertprobe"); roots += p; p.toString
@@ -100,10 +88,10 @@ object UpsertProbe {
         val cat = new Catalog(root)
         val h = new TableHandle(spark, cat, "orders_b")
           .init(uniqueOn = Seq("o_orderkey"), hashBuckets = Some(Buckets))
-        buildT ::= timed { h.append(corpus); h.flush() }
-        up8 ::= timed { h.upsert(b8); h.flush() }
-        up64 ::= timed { h.upsert(b64); h.flush() }
-        up256 ::= timed { h.upsert(b256); h.flush() }
+        buildT ::= seconds { h.append(corpus); h.flush() }
+        up8 ::= seconds { h.upsert(b8); h.flush() }
+        up64 ::= seconds { h.upsert(b64); h.flush() }
+        up256 ::= seconds { h.upsert(b256); h.flush() }
       }
 
       // ---- unbucketed baseline: the full-rewrite shape
@@ -113,7 +101,7 @@ object UpsertProbe {
         val h = new TableHandle(spark, new Catalog(root), "orders_f")
           .init(uniqueOn = Seq("o_orderkey"))
         h.append(corpus); h.flush()
-        upFlat ::= timed { h.upsert(b8); h.flush() }
+        upFlat ::= seconds { h.upsert(b8); h.flush() }
       }
 
       // ---- sustained appends + compact (bucketed table, one run)
@@ -122,7 +110,7 @@ object UpsertProbe {
         .init(uniqueOn = Seq("o_orderkey"), hashBuckets = Some(Buckets))
       h.append(corpus); h.flush()
       val fresh = b256.withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-      val appendT = timed {
+      val appendT = seconds {
         (1 to 8).foreach { i =>
           h.append(fresh.withColumn("o_orderkey",
             col("o_orderkey") + lit(i.toLong * 10000000L)))
@@ -130,7 +118,7 @@ object UpsertProbe {
         }
       }
       val filesBefore = countFiles(new Catalog(root), "orders_c")
-      val compactT = timed { h.compact() }
+      val compactT = seconds { h.compact() }
       val filesAfter = countFiles(new Catalog(root), "orders_c")
 
       def num(v: Double): String =

@@ -12,11 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** Four cores whatever SPARK_GRAFT_CPUS says, so specs see the same
+    * partitioning on every host.
+    */
+  lazy val session: SparkSession =
+    Sessions.local("4").appName("graft-test").getOrCreate()
 }

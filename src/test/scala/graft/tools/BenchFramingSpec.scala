@@ -27,7 +27,8 @@ class BenchFramingSpec extends AnyFunSuite {
     assert(node.get("n_queries").asInt() == results.size)
     assert(node.get("queries_shown").asInt() == node.get("queries").size())
     assert(node.get("queries_shown").asInt() <= results.size)
-    assert(node.get("full").asText() == "BENCH_LAST.json")
+    assert(node.get("cpus").asInt() == 32)
+    assert(node.get("full").asText() == "BENCH_LAST_c32.json")
     // calibration fields must always be present for cross-run compare
     assert(node.has("calibration_sec") && node.has("calib_factor")
       && node.has("value_norm"), s"$label: calibration fields missing")
@@ -78,6 +79,22 @@ class BenchFramingSpec extends AnyFunSuite {
   test("calibration kernel is deterministic work and returns a sane time") {
     val t = graft.Bench.calibrationOnce()
     assert(t > 0.01 && t < 30.0, s"calibration kernel took $t s")
+  }
+
+  test("a worker failure fails the multi-core calibration, not a short wall time") {
+    val e = intercept[IllegalStateException] {
+      graft.Bench.concurrentSeconds(2)(throw new IllegalStateException("worker died"))
+    }
+    assert(e.getMessage == "worker died")
+    assert(graft.Bench.concurrentSeconds(2)(()) >= 0.0)
+  }
+
+  test("the full map is scoped by core count, so a c8 run never overwrites c32") {
+    assert(graft.Bench.lastFile(32) == "BENCH_LAST_c32.json")
+    assert(graft.Bench.lastFile(8) != graft.Bench.lastFile(32))
+    val node = mapper.readTree(graft.Bench.renderLine(Seq("q1" -> 1.0), Nil, "sf", cpus = 8))
+    assert(node.get("cpus").asInt() == 8)
+    assert(node.get("full").asText() == "BENCH_LAST_c8.json")
   }
 
   test("runs=1 artifacts label the aggregate 'single', not 'median'") {
