@@ -32,19 +32,17 @@ final class StreamCursor(
     state.get(stateKey).map(_.toString).orElse(startingValue.map(_.toString))
   private var current: Option[String] = persisted
 
-  private def orderCol: StructField =
-    table.read.schema.find(_.name == orderBy).getOrElse(
-      throw new IllegalArgumentException(
-        s"stream ordering column '$orderBy' not in table '${table.name}'"))
-
-  private def offsetLit(v: String): org.apache.spark.sql.Column =
-    lit(v).cast(orderCol.dataType)
-
-  /** The unconsumed slice as a DataFrame (incremental batch read). */
+  /** The unconsumed slice as a DataFrame (incremental batch read); the
+    * offset literal takes the ordering column's type from that read.
+    */
   def df(): DataFrame = {
     val base = table.read
     current match {
-      case Some(v) => base.filter(col(orderBy) > offsetLit(v)).orderBy(col(orderBy))
+      case Some(v) =>
+        val orderType = base.schema.find(_.name == orderBy).getOrElse(
+          throw new IllegalArgumentException(
+            s"stream ordering column '$orderBy' not in table '${table.name}'")).dataType
+        base.filter(col(orderBy) > lit(v).cast(orderType)).orderBy(col(orderBy))
       case None => base.orderBy(col(orderBy))
     }
   }
@@ -59,16 +57,6 @@ final class StreamCursor(
     slice.toLocalIterator().asScala.map { r: Row =>
       current = Some(String.valueOf(r.get(idx)))
       cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap
-    }
-  }
-
-  /** Typed consumption helper for Dataset-style processing. */
-  def consumeRows(f: Row => Unit): Unit = {
-    val slice = df()
-    val idx = slice.columns.indexOf(orderBy)
-    slice.toLocalIterator().asScala.foreach { r =>
-      current = Some(String.valueOf(r.get(idx)))
-      f(r)
     }
   }
 

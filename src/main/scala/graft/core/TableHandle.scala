@@ -286,24 +286,13 @@ final class TableHandle(
       case Some(v) =>
         val path = catalog.versionPath(name, v)
         val existing = spark.read.parquet(path)
-        val incomingRaw = withAutoFields(df, batchSeqFor())
-        // partition-directory values read back type-INFERRED (a string
-        // "2024-01-01" partition key comes back DATE); align the
-        // incoming partition columns to the inferred types so such
-        // tables don't fall into a full-table rewrite on every append.
-        // (Values whose string and inferred forms differ — "01" vs 1 —
-        // need a declared schema; see init scaladoc.)
-        val incoming = m.partitionBy.foldLeft(incomingRaw) { (d, p) =>
-          (existing.schema.find(_.name == p), d.schema.find(_.name == p)) match {
-            case (Some(ef), Some(inf)) if ef.dataType != inf.dataType =>
-              d.withColumn(p, col(p).cast(ef.dataType))
-            case _ => d
-          }
-        }
-        if (existing.schema == incoming.schema ||
-            sameColumns(existing.schema, incoming.schema)) {
-          val aligned = clusterLight(
-            incoming.select(existing.columns.map(col): _*), m.clusterBy)
+        val incoming = withAutoFields(df, batchSeqFor())
+        if (fitsStored(existing.schema, incoming.schema, m.partitionBy)) {
+          val present = incoming.columns.toSet
+          val aligned = clusterLight(incoming.select(existing.schema.map { f =>
+            (if (present(f.name)) col(f.name).cast(f.dataType)
+             else lit(null).cast(f.dataType)).as(f.name)
+          }: _*), m.clusterBy)
           // partitioned tables MUST append through partitionBy or the
           // new files land flat at the version root and corrupt the
           // directory layout (partition discovery then drops them)
@@ -314,7 +303,7 @@ final class TableHandle(
           })
           catalog.setRecordCount(name, v, catalog.recordCount(name) + added)
         } else {
-          // widen-only schema evolution: rewrite into a fresh version
+          // a new column or a wider type: rewrite into a fresh version
           writeNewVersion(unionWiden(existing, incoming))
         }
         onSignal(name, "update")
@@ -344,10 +333,10 @@ final class TableHandle(
       else Seq(monotonically_increasing_id().desc) // arrival order (nondeterministic under retry)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(tieBreak: _*)
-    // persist the deduped batch: the touched-partition collect, the
-    // semi-join prune frame, and the merge join must all see the SAME
-    // winner rows — the monotonically_increasing_id tie-break is not
-    // stable across independent re-evaluations (ADVICE r3)
+    // persist the deduped batch: the touched-partition collect and the
+    // merge join must both see the SAME winner rows — the
+    // monotonically_increasing_id tie-break is not stable across
+    // independent re-evaluations (ADVICE r3)
     val incoming = incomingRaw
       .withColumn("_gr_rn", row_number().over(w))
       .filter(col("_gr_rn") === 1).drop("_gr_rn")
@@ -367,41 +356,17 @@ final class TableHandle(
         // partitions anyway (duplicate rows)
         val touchedSet: Set[List[String]] =
           touched.map(_.map(partitionPathValue)).toSet
-        // Touched-partition scan predicate: a literal OR-chain lets the
-        // parquet source prune partitions statically, but its expression
-        // tree grows with the partition count (codegen blowup on wide
-        // upserts) — above the threshold switch to a broadcast semi-join
-        // on the partition-value tuple (DPP/AQE prune at runtime).
-        val existingTouched =
-          if (touched.length <= PrunePredicateMaxPartitions) {
-            val pred = touched.map(t =>
-                parts.zip(t).map { case (p, v) => col(p) <=> lit(v) }.reduce(_ && _))
-              .reduceOption(_ || _).getOrElse(lit(false))
-            read.filter(pred) // statically partition-pruned scan
-          } else {
-            // Split tuples: plain (no nulls) ride an EqualTo semi-join
-            // against a driver-built local frame (DPP-eligible — a
-            // null-safe join key would be rewritten past what partition
-            // pruning matches, reverting the scan to O(table)); the
-            // usually-tiny null-bearing subset goes through a
-            // statically-pruned <=> filter. EqualTo never matches null
-            // partition rows, so the union is disjoint.
-            val (nullTuples, plainTuples) = touched.partition(_.contains(null))
-            val partsSchema = StructType(
-              incoming.select(parts.map(col): _*).schema.map(_.copy(nullable = true)))
-            val plainDf = spark.createDataFrame(
-              java.util.Arrays.asList(plainTuples.map(t => Row(t: _*)): _*), partsSchema)
-            val eqJoin = read.join(broadcast(plainDf), parts, "left_semi")
-            val nullPred = nullTuples.map(t =>
-                parts.zip(t).map { case (p, v) => col(p) <=> lit(v) }.reduce(_ && _))
-              .reduceOption(_ || _)
-            (plainTuples.nonEmpty, nullPred) match {
-              case (true, Some(pred)) => eqJoin.unionByName(read.filter(pred))
-              case (true, None) => eqJoin
-              case (false, Some(pred)) => read.filter(pred)
-              case (false, None) => read.filter(lit(false))
-            }
-          }
+        // Touched-partition scan: one tuple-membership test over struct
+        // literals cast to the stored partition types. Struct equality
+        // matches null fields, so the null partition is found too; the
+        // parquet source prunes on it statically (a PartitionFilters
+        // entry, IN turning INSET above 10 tuples, so its size does not
+        // grow with the touched count).
+        val current = read
+        val existingTouched = current.filter(struct(parts.map(col): _*).isin(
+          touched.map(t => struct(parts.zip(t).map { case (p, v) =>
+            lit(v).cast(current.schema(p).dataType).as(p)
+          }: _*)): _*))
         val prevTotal = catalog.recordCount(name)
         val obsTouched = org.apache.spark.sql.Observation()
         val existingObserved =
@@ -547,13 +512,6 @@ object TableHandle {
   /** Derived hash-bucket partition column (init(hashBuckets=…)). */
   val BucketCol = "_gr_bucket"
 
-  /** Above this many touched partitions the upsert scan predicate
-    * switches from a literal OR-chain (statically prunable) to a
-    * broadcast semi-join (bounded expression size). Mutable only so the
-    * spec suite can force both paths onto identical input.
-    */
-  private[core] var PrunePredicateMaxPartitions = 64
-
   /** A partition value as it appears in the parquet directory name:
     * the escaping `InsertIntoHadoopFsRelation` applies, with null and
     * empty collapsing to the Hive default-partition sentinel. (Date and
@@ -617,9 +575,16 @@ object TableHandle {
     case other => other
   }
 
-  private[core] def sameColumns(a: StructType, b: StructType): Boolean =
-    a.fields.map(f => (f.name, normNull(f.dataType))).sortBy(_._1).sameElements(
-      b.fields.map(f => (f.name, normNull(f.dataType))).sortBy(_._1))
+  /** Whether a batch appends in place: every incoming column is stored
+    * already, and either it is a partition column (the stored type,
+    * inferred from the directory names, wins) or the stored type holds
+    * it (widening gives back the stored type). Stored columns the batch
+    * lacks are null-filled; a new column or a wider type rewrites.
+    */
+  private[core] def fitsStored(stored: StructType, incoming: StructType,
+      partitionBy: Seq[String]): Boolean =
+    incoming.fields.forall(f => stored.find(_.name == f.name).exists(s =>
+      partitionBy.contains(f.name) || widen(s.dataType, f.dataType) == normNull(s.dataType)))
 
   /** Widen-only union: missing columns become nulls; numeric types are
     * promoted (int→long→double); arrays widen element-wise;

@@ -200,10 +200,6 @@ final class GraphRunner(
         }
       }
     }
-    // cycle check over store-mediated edges
-    val producers = flatNodes.flatMap { case (id, f, _) =>
-      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     // one producer per store: two writers were silent last-wins under
     // serial execution, but waves run independent nodes concurrently —
     // make the ambiguity a compile error like the platform does
@@ -211,9 +207,7 @@ final class GraphRunner(
       if (ids.size > 1)
         errors += s"store '$store' has multiple producers: ${ids.sorted.mkString(", ")}"
     }
-    val adj = flatNodes.map { case (id, f, _) =>
-      id -> f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet
-    }.toMap
+    // cycle check over store-mediated edges (a self-edge is a cycle)
     val visiting = mutable.Set.empty[String]
     val done = mutable.Set.empty[String]
     def dfs(n: String): Boolean = { // true = cycle
@@ -221,27 +215,33 @@ final class GraphRunner(
       else if (visiting(n)) true
       else {
         visiting += n
-        val cyc = adj.getOrElse(n, Set.empty).exists(dfs)
+        val cyc = upstream.getOrElse(n, Set.empty).exists(dfs)
         visiting -= n; done += n
         cyc
       }
     }
-    if (adj.keys.exists(dfs)) errors += "graph contains a cycle"
+    if (upstream.keys.exists(dfs)) errors += "graph contains a cycle"
     errors.toSeq
   }
 
-  /** Topological order over store-mediated dependencies. */
-  def topoOrder: List[String] = {
-    val producers = flatNodes.flatMap { case (id, f, _) =>
+  /** Store → the nodes that write it (outputs and webhook targets). */
+  private lazy val producers: Map[String, List[String]] =
+    flatNodes.flatMap { case (id, f, _) =>
       f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deps = flatNodes.map { case (id, f, _) =>
+
+  /** Node → the producers of the stores it reads (self-edges kept). */
+  private lazy val upstream: Map[String, Set[String]] =
+    flatNodes.map { case (id, f, _) =>
       id -> f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet
     }.toMap
+
+  /** Topological order over store-mediated dependencies. */
+  def topoOrder: List[String] = {
     val order = mutable.ArrayBuffer.empty[String]
     val seen = mutable.Set.empty[String]
     def visit(n: String): Unit =
-      if (!seen(n)) { seen += n; deps.getOrElse(n, Set.empty).foreach(visit); order += n }
+      if (!seen(n)) { seen += n; upstream.getOrElse(n, Set.empty).foreach(visit); order += n }
     flatNodes.foreach { case (id, _, _) => visit(id) }
     order.toList
   }
@@ -254,17 +254,11 @@ final class GraphRunner(
     * cluster instead of serializing whole branches).
     */
   private[graph] def waveOrder: List[List[String]] = {
-    val producers = flatNodes.flatMap { case (id, f, _) =>
-      f.outputs.values.map(_ -> id) ++ f.webhook.map(_ -> id)
-    }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deps = flatNodes.map { case (id, f, _) =>
-      id -> (f.inputs.values.flatMap(producers.getOrElse(_, Nil)).toSet - id)
-    }.toMap
     val level = mutable.Map.empty[String, Int]
     def levelOf(n: String): Int = level.get(n) match {
       case Some(l) => l
       case None =>
-        val ds = deps.getOrElse(n, Set.empty)
+        val ds = upstream.getOrElse(n, Set.empty) - n // self-edges dropped
         val l = if (ds.isEmpty) 0 else ds.map(levelOf).max + 1
         level(n) = l
         l

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 import graft.core.{Catalog, TableHandle}
@@ -180,23 +180,30 @@ object StreamingBridge {
       .option("checkpointLocation", s"$checkpointRoot/_checkpoints/ingest_${corpus.name}")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fp = graft.llm.TextAnalysis.fingerprint(col(textCol))
-        val inBatch = batch.withColumn("fp", fp)
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("fp")
-              .orderBy(batch.columns.map(col): _*)))
-          .filter(col("_rn") === 1).drop("_rn", "fp")
-        val fresh =
-          if (corpus.exists)
-            graft.llm.Corpus.dedupAgainstCorpus(inBatch, corpus.read, textCol)
-              .drop("fp")
-          else inBatch
-        corpus.append(fresh)
-        corpus.flush()
-        ()
+        appendDeduped(batch, corpus, textCol, batch.columns.toSeq.map(col))
       }
       .start()
     q.awaitTermination()
+  }
+
+  /** The exact-dedup step of [[dedupedIngest]] and [[curatedIngest]]:
+    * collapse the batch's duplicate fingerprints (the first row by
+    * `tieBreak` survives), drop rows whose fingerprint the corpus
+    * already holds, append and flush the rest.
+    */
+  private def appendDeduped(batch: DataFrame, corpus: TableHandle,
+      textCol: String, tieBreak: Seq[Column]): Unit = {
+    val inBatch = batch
+      .withColumn("fp", graft.llm.TextAnalysis.fingerprint(col(textCol)))
+      .withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("fp").orderBy(tieBreak: _*)))
+      .filter(col("_rn") === 1).drop("_rn", "fp")
+    val fresh =
+      if (corpus.exists)
+        graft.llm.Corpus.dedupAgainstCorpus(inBatch, corpus.read, textCol).drop("fp")
+      else inBatch
+    corpus.append(fresh)
+    corpus.flush()
   }
 
   /** Streaming CURATED ingest: the full cleaning gauntlet per
@@ -239,20 +246,7 @@ object StreamingBridge {
           .join(cleaned, idCol)
           .select(col(idCol), col(textCol), col("score"))
         // 3. dedup within the batch, then against the corpus
-        val fp = graft.llm.TextAnalysis.fingerprint(col(textCol))
-        val inBatch = gated.withColumn("fp", fp)
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("fp")
-              .orderBy(col(idCol))))
-          .filter(col("_rn") === 1).drop("_rn", "fp")
-        val fresh =
-          if (corpus.exists)
-            graft.llm.Corpus.dedupAgainstCorpus(inBatch, corpus.read, textCol)
-              .drop("fp")
-          else inBatch
-        corpus.append(fresh)
-        corpus.flush()
-        ()
+        appendDeduped(gated, corpus, textCol, Seq(col(idCol)))
       }
       .start()
     q.awaitTermination()

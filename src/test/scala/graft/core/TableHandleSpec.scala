@@ -181,6 +181,38 @@ class TableHandleSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("_gr_bucket"))
   }
 
+  test("hash-bucketed upsert scans the previous version through PartitionFilters on the bucket") {
+    import spark.implicits._
+    val root = tmpDir("tbl")
+    val h = handle(root).init(uniqueOn = Seq("id"), hashBuckets = Some(8))
+    h.append((1L to 1000L).map(i => (i, s"v$i")).toDF("id", "s")); h.flush()
+    val v1 = h.meta.activeVersion.get
+    val v1Scan = java.nio.file.Paths.get(root).getFileName.toString + "/t/" + v1
+    // the upsert's write plan, as the session reports it (listener
+    // events arrive asynchronously, hence the poll)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def scans = {
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toList.filter(_.contains(v1Scan))
+    }
+    try {
+      h.upsert(Seq((500L, "UPDATED"), (501L, "U2")).toDF("id", "s")); h.flush()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (scans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(scans.nonEmpty, s"no plan scanned $v1Scan")
+    val pruned = raw"PartitionFilters: \[[^\]]*_gr_bucket".r
+    assert(scans.forall(pruned.findFirstIn(_).isDefined), scans.mkString("\n"))
+    assert(h.read.count() == 1000)
+  }
+
   test("date-partitioned table: writes are dir-partitioned, filters prune") {
     import spark.implicits._
     val h = handle(tmpDir("tbl")).init(partitionBy = Seq("day"))
@@ -194,6 +226,11 @@ class TableHandleSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"))
     assert(h.read.where(col("day") === "2020-01-02").count() == 2)
+    // the day reads back as DATE; a string-keyed batch still appends in place
+    val v = h.meta.activeVersion.get
+    h.append(Seq((4L, "2020-01-03")).toDF("id", "day")); h.flush()
+    assert(h.meta.activeVersion.contains(v))
+    assert(h.read.where(col("day") === "2020-01-03").count() == 1 && h.recordCount == 4)
   }
 
   test("append with a changed schema widens into a fresh version") {
@@ -207,6 +244,24 @@ class TableHandleSpec extends SparkSpec {
     assert(df.schema("v").dataType.typeName == "double")
     assert(df.count() == 2)
     assert(df.where(col("extra").isNull).count() == 1)
+  }
+
+  test("a batch lacking an optional column or carrying a narrower type appends in place") {
+    import spark.implicits._
+    val h = handle(tmpDir("tbl"))
+    h.append(Seq((1L, 1.5)).toDF("id", "v")); h.flush()
+    h.append(Seq((2L, 2.5, "opt")).toDF("id", "v", "extra")); h.flush() // new column: rewrite
+    val v = h.meta.activeVersion.get
+    h.append(Seq((3L, 3.5)).toDF("id", "v")); h.flush()                  // lacks `extra`
+    h.append(Seq((4L, 4L, "x")).toDF("id", "v", "extra")); h.flush()     // bigint into double
+    assert(h.meta.activeVersion.contains(v), "narrower batches must not rewrite the version")
+    val df = h.read
+    assert(df.schema("v").dataType.typeName == "double")
+    assert(df.count() == 4 && h.recordCount == 4)
+    val rows = df.select("id", "v", "extra").collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), Option(r.getString(2)))).toMap
+    assert(rows == Map(1L -> (1.5, None), 2L -> (2.5, Some("opt")),
+      3L -> (3.5, None), 4L -> (4.0, Some("x"))))
   }
 
   test("second append of an array column keeps the array type (parquet nullability round-trip)") {
@@ -247,40 +302,25 @@ class TableHandleSpec extends SparkSpec {
     assert(chunks.flatten.map(_("id").asInstanceOf[Long]).sorted == (1L to 10L).toList)
   }
 
-  test("upsert above the prune threshold: semi-join path matches OR-chain path") {
+  test("upsert over 40 partitions + the null one matches last-write-wins") {
     import spark.implicits._
-    def build(root: String): TableHandle = {
-      val h = handle(root).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
-      h.append(((0 until 400).map(i => (i.toLong, Option(i % 80), s"v$i")) ++
-        Seq((1000L, Option.empty[Int], "n0"), (1001L, Option.empty[Int], "n1")))
-        .toDF("id", "p", "s"))
-      h.flush()
-      h
-    }
-    // 70 touched partitions + the NULL partition, mixed updates/inserts
-    val incoming = ((0 until 140).map(i => (i.toLong * 2, Option((i * 2) % 80), s"NEW$i")) ++
-      Seq((1001L, Option.empty[Int], "NULLNEW")))
-      .toDF("id", "p", "s")
-    val saved = TableHandle.PrunePredicateMaxPartitions
-    try {
-      TableHandle.PrunePredicateMaxPartitions = 1000 // literal OR-chain
-      val hOr = build(tmpDir("orchain"))
-      hOr.upsert(incoming); hOr.flush()
-      TableHandle.PrunePredicateMaxPartitions = 8 // broadcast semi-join
-      val hSemi = build(tmpDir("semij"))
-      hSemi.upsert(incoming); hSemi.flush()
-      val a = hOr.read.orderBy("id").collect().map(_.toString).toSeq
-      val b = hSemi.read.orderBy("id").collect().map(_.toString).toSeq
-      assert(a == b)
-      assert(hOr.recordCount == hSemi.recordCount)
-      // derived count formula matches the physical row count
-      assert(hSemi.recordCount == hSemi.read.count())
-      // null partition on the semi-join path: untouched sibling kept,
-      // touched row merged, nothing duplicated or dropped
-      val nulls = hSemi.read.filter(col("id") >= 1000L).collect()
-        .map(r => r.getAs[Long]("id") -> r.getAs[String]("s")).toMap
-      assert(nulls == Map(1000L -> "n0", 1001L -> "NULLNEW"))
-    } finally TableHandle.PrunePredicateMaxPartitions = saved
+    val h = handle(tmpDir("wide")).init(uniqueOn = Seq("id"), partitionBy = Seq("p"))
+    val base = (0 until 400).map(i => (i.toLong, Option(i % 80), s"v$i")) ++
+      Seq((1000L, Option.empty[Int], "n0"), (1001L, Option.empty[Int], "n1"))
+    h.append(base.toDF("id", "p", "s")); h.flush()
+    // 140 updates over 40 partitions + one in the NULL partition: the
+    // touched tuples pass the IN → INSET threshold of the scan predicate
+    val batch = (0 until 140).map(i => (i.toLong * 2, Option((i * 2) % 80), s"NEW$i")) ++
+      Seq((1001L, Option.empty[Int], "NULLNEW"))
+    h.upsert(batch.toDF("id", "p", "s")); h.flush()
+    val expected = (base ++ batch).map { case (id, p, s) => id -> (p, s) }.toMap
+    val rows = h.read.select("id", "p", "s").collect().map(r =>
+      r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Int]), r.getString(2))).toSeq
+    // nothing duplicated (untouched partitions hardlinked, touched ones
+    // merged, the null partition's untouched sibling kept)
+    assert(rows.size == expected.size)
+    assert(rows.toMap == expected)
+    assert(h.recordCount == expected.size)
   }
 
   test("upsert touching a null partition value neither duplicates nor drops rows") {
